@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from asyncdatapipeline_spark.operators._util import per_gateway
 from asyncdatapipeline_spark.registry import query
 from asyncdatapipeline_spark.sources.tables import load_table
 from asyncdatapipeline_spark.llm.dedup import _shingle_array
@@ -296,22 +297,25 @@ def q_split_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", *split_exprs())
 
 
-def split_exprs() -> list:
+@per_gateway
+def split_exprs() -> tuple:
     """Split-assignment columns as reusable row-local expressions —
-    shared by the batch query (q_split_hash) and the streaming curation
-    gate (streaming/curation.py). Being a pure function of doc_id is
-    what makes the assignment identical per micro-batch, per retry, and
-    per corpus append."""
+    shared by the batch query (q_split_hash), the partitioned sink
+    (sources/sinks.py) and the streaming curation gate
+    (streaming/curation.py). Being a pure function of doc_id is what
+    makes the assignment identical per micro-batch, per retry, and per
+    corpus append. Built once per JVM gateway; every call returns the
+    same tuple (``per_gateway``)."""
     bucket = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2), 16, 10
     ).cast("int")
-    return [
+    return (
         bucket.alias("bucket"),
         F.when(bucket < _SPLIT_TRAIN_LT, "train")
         .when(bucket < _SPLIT_VALID_LT, "valid")
         .otherwise("test")
         .alias("split"),
-    ]
+    )
 
 
 _SHINGLES_DUCK = (

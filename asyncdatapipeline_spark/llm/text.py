@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from asyncdatapipeline_spark.operators._util import bounded_part
+from asyncdatapipeline_spark.operators._util import bounded_part, per_gateway
 from asyncdatapipeline_spark.registry import query
 from asyncdatapipeline_spark.sources.tables import load_table
 
@@ -164,17 +164,22 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", *quality_exprs())
 
 
-def quality_exprs() -> list:
+@per_gateway
+def quality_exprs() -> tuple:
     """The quality-score columns as reusable row-local expressions —
     shared verbatim by the batch query (q_text_quality) and the
     streaming curation gate (streaming/curation.py), which is what
-    makes batch/stream equivalence hold by construction."""
+    makes batch/stream equivalence hold by construction.
+
+    The Columns are built once per JVM gateway and every call returns
+    the same tuple (``per_gateway``): the gate runs per micro-batch, and
+    rebuilding these trees costs hundreds of py4j round trips per call."""
     words = F.split(F.col("text"), " ")
     stop_arr = F.array(*[F.lit(w) for w in ("the", "a", "of", "and", "in")])
     nw = F.size(words)
     n_stop = F.size(F.filter(words, lambda w: F.array_contains(stop_arr, w)))
     stop_ratio = n_stop * F.lit(1.0) / nw
-    return [
+    return (
         nw.alias("n_words"),
         F.round((F.length("text") - nw + 1) * F.lit(1.0) / nw, 6).alias(
             "mean_word_len"
@@ -184,7 +189,7 @@ def quality_exprs() -> list:
         (nw.between(20, 1000) & stop_ratio.between(0.001, 0.6)).alias(
             "passes_quality"
         ),
-    ]
+    )
 
 
 @query(

@@ -72,10 +72,16 @@ class MetricsHub:
 
     Mirrors the reference's locking discipline (``metricsMu``,
     async_data_pipeline.go:78) and its 1s-default ticker subscription loop
-    (:103-136). In streaming mode the hub is fed by a
-    ``StreamingQueryListener`` instead of inline counter updates — same
-    external contract.
+    (:103-136). :class:`~asyncdatapipeline_spark.pipeline.Pipeline` feeds
+    it inline from its processor thread; ``StreamingPipeline`` feeds it
+    from its ``StreamingQueryListener``, one call per progress event that
+    carried rows, which also folds in the trigger's phase durations
+    (:meth:`record_phases`). Same external contract either way.
     """
+
+    # StreamingQueryProgress.durationMs keys exported per epoch: the
+    # micro-batch phases, in the order a trigger runs them.
+    PHASES = ("latestOffset", "getBatch", "queryPlanning", "addBatch", "walCommit")
 
     DEFAULT_INTERVAL = 1.0
 
@@ -86,6 +92,8 @@ class MetricsHub:
         self._subs_lock = threading.Lock()
         self._last_observed: dict = {}
         self._observed_totals: dict = {}
+        self._last_phases: dict = {}
+        self._phase_totals: dict = {}
 
     # -- accumulation (called by the pipeline) ---------------------------
     def record_batch(self, item_count: int, processing_seconds: float) -> None:
@@ -114,6 +122,16 @@ class MetricsHub:
                     continue
                 self._observed_totals[k] = self._observed_totals.get(k, 0) + v
 
+    def record_phases(self, duration_ms: dict) -> None:
+        """Fold one trigger's ``durationMs`` into the hub: the last epoch's
+        phase milliseconds and their running totals (a phase the trigger
+        did not report counts as 0)."""
+        last = {ph: duration_ms.get(ph, 0) for ph in self.PHASES}
+        with self._lock:
+            self._last_phases = last
+            for ph, ms in last.items():
+                self._phase_totals[ph] = self._phase_totals.get(ph, 0) + ms
+
     def record_idle(self, seconds: float) -> None:
         with self._lock:
             self._metrics.idle_duration += seconds
@@ -127,6 +145,8 @@ class MetricsHub:
             self._metrics = PipelineMetrics()
             self._last_observed = {}
             self._observed_totals = {}
+            self._last_phases = {}
+            self._phase_totals = {}
 
     # -- accessors (reference :96-101, :157-168) -------------------------
     def current(self) -> PipelineMetrics:
@@ -142,6 +162,9 @@ class MetricsHub:
                 out["observed_totals"] = dict(self._observed_totals)
             if self._last_observed:
                 out["last_observed"] = dict(self._last_observed)
+            if self._last_phases:
+                out["last_phase_ms"] = dict(self._last_phases)
+                out["phase_ms_totals"] = dict(self._phase_totals)
         return out
 
     # -- subscriptions (reference :103-155) ------------------------------
@@ -206,17 +229,28 @@ def attach_observation(df, aggs: dict, name: str):
     return df.observe(obs, F.count(F.lit(1)).alias("rows"), *extra), obs
 
 
+def observation_ready(obs) -> bool:
+    """True once an action has filled ``obs``, so ``obs.get`` returns at
+    once instead of blocking. Spark completes an Observation from its
+    listener bus, usually a few milliseconds after the action returns, so
+    False right after an action does not yet prove the action skipped the
+    observed plan."""
+    jo = obs._jo
+    return jo is not None and jo.future().isCompleted()
+
+
 def observe_batch(df, hub: "MetricsHub", name: str = "batch", **aggs):
     """Attach free row-count metrics to a BATCH DataFrame via
     ``df.observe`` and feed them into ``hub`` — the batch-side analogue
-    of the streaming ``StreamingQueryListener`` feed (same
+    of ``StreamingPipeline``'s progress-event feed (same
     ``MetricsHub`` contract as the reference's ``ExportMetrics``,
     async_data_pipeline.go:157-168).
 
     Returns ``(observed_df, harvest)``: run any ONE action on
     ``observed_df``, then call ``harvest()`` to record the observed row
     count (plus wall time measured around the harvest barrier) into the
-    hub and get the raw observation dict back.
+    hub and get the raw observation dict back. ``harvest()`` blocks until
+    an action has filled the observation.
 
     Why observe, not ``count()``: the metrics ride the SAME pass as the
     real action — zero extra jobs, zero extra scans. At 100 TB a

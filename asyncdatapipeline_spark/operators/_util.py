@@ -19,8 +19,9 @@ change the merge order at 100 TB).
 
 from __future__ import annotations
 
+import functools
 import os
-from typing import Sequence
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
@@ -124,6 +125,31 @@ def bounded_part(col: Column) -> Column:
         .when(col < 0, F.lit(0))
         .when(col.isNull(), F.lit(0))
     )
+
+
+def per_gateway(build: Callable[[], Sequence[Column]]) -> Callable[[], tuple]:
+    """Cache ``build()``'s Column list as a tuple, once per live JVM gateway.
+
+    A Column is an immutable expression tree, so one set can serve every
+    plan; rebuilding it costs a py4j round trip per node (hundreds for
+    the curation gate's lists), a fixed planning cost paid on every
+    call. The cache is keyed on the gateway object, so a new JVM gets a
+    fresh build; the tuple keeps callers from mutating the shared list.
+    """
+    from pyspark import SparkContext
+
+    cache: list = [(None, ())]
+
+    @functools.wraps(build)
+    def get() -> tuple:
+        gateway = SparkContext._gateway
+        key, cols = cache[0]
+        if gateway is None or key is not gateway:
+            cols = tuple(build())
+            cache[0] = (gateway, cols)
+        return cols
+
+    return get
 
 
 def bounded_part_sql(expr: str) -> str:

@@ -18,8 +18,11 @@ Two engine modes:
   ``readStream → foreachBatch(process)`` with a
   ``StreamingQueryListener`` metrics bridge and an idle watchdog that
   stops the query. This is the shape that scales to a real cluster: the
-  micro-batch engine replaces the channel, checkpointing replaces
-  at-most-once, and executors replace the single consumer thread.
+  micro-batch engine replaces the channel and executors replace the
+  single consumer thread. Delivery is still at-most-once: the query sets
+  no checkpoint location and the pull source cannot replay a batch
+  (``sources/pull_source.py`` ``readBetweenOffsets`` returns nothing),
+  so rows pulled before a restart are lost, as in thread mode.
 
 Documented deviations from the reference (SURVEY.md §2 quirks, §7):
 
@@ -49,13 +52,20 @@ try:
 except ImportError:  # pragma: no cover
     _pd = None
 
+from pyspark.sql.streaming import StreamingQueryListener
+
 from asyncdatapipeline_spark.config import PipelineConfig
 from asyncdatapipeline_spark.errors import (
     CollectError,
     ProcessError,
     StopPipeline,
 )
-from asyncdatapipeline_spark.metrics import MetricsHub, PipelineMetrics
+from asyncdatapipeline_spark.metrics import (
+    MetricsHub,
+    PipelineMetrics,
+    attach_observation,
+    observation_ready,
+)
 
 
 class CloseReason(enum.Enum):
@@ -225,6 +235,10 @@ class Pipeline:
         def processor() -> None:
             # reference processor goroutine, :293-340
             last_data = time.monotonic()
+            # end of the previous process() call, or the run start: idle
+            # is recorded from here to the next batch's arrival, so it
+            # never overlaps ProcessingDuration
+            idle_from = last_data
             while True:
                 # Idle clock resets at collect-return (data pending) as
                 # well as at batch arrival, so normalization latency on
@@ -254,10 +268,11 @@ class Pipeline:
                             return
                         continue
                 now = time.monotonic()
-                # IdleDuration = inter-arrival gap (reference :306-310)
-                self.metrics.record_idle(now - last_data)
-                last_data = now
-                t0 = time.monotonic()
+                # IdleDuration = the wait for this batch (the reference
+                # records the inter-arrival gap, :306-310, which also
+                # holds the previous process call)
+                self.metrics.record_idle(now - idle_from)
+                last_data = t0 = now
                 try:
                     self._process(self, payload)
                 except StopPipeline:
@@ -280,7 +295,8 @@ class Pipeline:
                         n_items = payload.count()
                     except Exception:  # pragma: no cover — metrics only
                         n_items = 0
-                self.metrics.record_batch(n_items, time.monotonic() - t0)
+                idle_from = time.monotonic()
+                self.metrics.record_batch(n_items, idle_from - t0)
 
         t_collect = threading.Thread(target=collector, daemon=True, name="collector")
         t_process = threading.Thread(target=processor, daemon=True, name="processor")
@@ -309,6 +325,25 @@ class Pipeline:
         return self.metrics.export()
 
 
+class _ProgressListener(StreamingQueryListener):
+    """Hands one :class:`StreamingPipeline` run's query events to it."""
+
+    def __init__(self, owner: "StreamingPipeline"):
+        self._owner = owner
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        self._owner._on_progress(event.progress)
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        self._owner._on_terminated(event)
+
+
 class StreamingPipeline:
     """Structured-Streaming-native pipeline: the scale path.
 
@@ -316,16 +351,39 @@ class StreamingPipeline:
     (the reference's ``ProcessFunc`` slot, async_data_pipeline.go:69-71)
     with:
 
-    - a ``StreamingQueryListener`` folding ``StreamingQueryProgress`` into
-      :class:`PipelineMetrics` (SURVEY.md §4 item 4);
+    - a ``StreamingQueryListener``, registered for this run's query only,
+      that folds every progress event carrying rows into
+      :class:`PipelineMetrics` (SURVEY.md §4 item 4): ``numInputRows`` as
+      the item count, the epoch's ``process`` time, and the trigger's
+      ``durationMs`` phases. The metrics cost no Spark job; each epoch
+      runs only the jobs ``process`` starts. ``numInputRows`` counts the
+      rows Spark read for the epoch, so a ``process`` that never reads
+      its batch adds no items and does not reset the idle clock;
     - an idle watchdog thread that calls ``query.stop()`` when no progress
       event has carried ``numInputRows > 0`` for ``idle_time`` seconds
       (engine implementation of the reference idle timer,
-      async_data_pipeline.go:243/:313/:334-337);
+      async_data_pipeline.go:243/:313/:334-337). It never fires while an
+      epoch is in flight, from entry to ``foreachBatch`` until the
+      epoch's progress event, so a slow ``process`` is not cut off;
     - sentinel/error handling in the foreachBatch wrapper
       (``StopPipeline`` → graceful stop + PROCESS_CANCEL; other
       exceptions → ``ProcessError`` + stop).
+
+    ``observe`` maps names to aggregate Columns. One ``Observation`` is
+    attached to every micro-batch before ``process`` receives it, so the
+    aggregates ride the action ``process`` runs on the batch (one
+    accumulator per task, no extra job) and reach ``export()`` as
+    ``last_observed`` / ``observed_totals``. They cover the rows that
+    action read. When ``process`` returns without executing the batch,
+    the wrapper runs one ``count()`` on it instead. The wrapper never
+    waits on ``Observation.get``: values are recorded once Spark has
+    filled them, at the latest when the run ends.
     """
+
+    # How long the wrapper gives Spark's listener bus to fill an epoch's
+    # Observation after process() returns, before concluding process never
+    # executed the batch (the fill usually lands within milliseconds).
+    _OBSERVE_GRACE_S = 0.25
 
     def __init__(
         self,
@@ -342,10 +400,6 @@ class StreamingPipeline:
         self.metrics = MetricsHub()
         self._process = process
         self._trigger = trigger or {"processingTime": "500 milliseconds"}
-        # name → unbound Column aggregate, observed on every micro-batch
-        # in the SAME pass as the wrapper's row count (df.observe rides
-        # the existing action as one accumulator per task — zero extra
-        # jobs; the A16 metrics family gains per-query custom aggregates)
         self._observe = dict(observe) if observe else None
         if self._observe and "rows" in self._observe:
             raise ValueError(
@@ -355,8 +409,16 @@ class StreamingPipeline:
         self._reason_lock = threading.Lock()
         self._errors: list[BaseException] = []
         self._stop_requested = threading.Event()
+        # Shared by the foreachBatch thread, the listener thread and the
+        # watchdog; guards the four fields below.
+        self._lock = threading.Lock()
         self._last_data = time.monotonic()
-        self._last_data_lock = threading.Lock()
+        self._in_flight: set[int] = set()      # epochs awaiting progress
+        self._process_s: dict[int, float] = {}  # epoch → process() seconds
+        self._pending_obs: list = []            # filled-later Observations
+        self._run_id: str | None = None
+        self._started = threading.Event()
+        self._terminated = threading.Event()
         self.query = None
 
     def _set_reason(self, reason: CloseReason) -> None:
@@ -364,32 +426,18 @@ class StreamingPipeline:
             if self._reason is CloseReason.NONE:
                 self._reason = reason
 
-    def _note_data(self) -> None:
-        with self._last_data_lock:
-            self._last_data = time.monotonic()
-
     def _foreach_batch(self, batch_df, epoch_id: int) -> None:
-        # The wrapper needs the batch's row count anyway (idle clock +
-        # ItemCount). When custom observe aggregates are configured they
-        # ride that same counting pass via df.observe — one job, one
-        # scan, rows + customs together.
+        # Starts no Spark job of its own: the row count, the idle clock and
+        # the phase timings come with this epoch's progress event
+        # (_on_progress). The wrapper marks the epoch in flight for the
+        # watchdog and times process().
+        with self._lock:
+            self._in_flight.add(epoch_id)
+        obs = None
         if self._observe:
-            from asyncdatapipeline_spark.metrics import attach_observation
-
             batch_df, obs = attach_observation(
                 batch_df, self._observe, f"epoch-{epoch_id}"
             )
-            batch_df.count()  # matures the observation
-            vals = obs.get
-            n = int(vals["rows"])
-            if n > 0:
-                self.metrics.record_observed(
-                    {k: v for k, v in vals.items() if k != "rows"}
-                )
-        else:
-            n = batch_df.count()
-        if n > 0:
-            self._note_data()
         t0 = time.monotonic()
         try:
             self._process(batch_df, epoch_id)
@@ -401,32 +449,115 @@ class StreamingPipeline:
             self._errors.append(ProcessError(str(exc), cause=exc, epoch_id=epoch_id))
             self._stop_requested.set()
             return
-        if n > 0:
-            self.metrics.record_batch(n, time.monotonic() - t0)
+        elapsed = time.monotonic() - t0
+        if obs is not None:
+            if not self._await_observation(obs, self._OBSERVE_GRACE_S):
+                batch_df.count()  # process() never executed the batch
+            with self._lock:
+                self._pending_obs.append(obs)
+            self._harvest_observations()
+        with self._lock:
+            self._process_s[epoch_id] = elapsed
+
+    @staticmethod
+    def _await_observation(obs, seconds: float) -> bool:
+        deadline = time.monotonic() + seconds
+        while not observation_ready(obs):
+            if time.monotonic() >= deadline:
+                return False
+            time.sleep(0.002)
+        return True
+
+    def _harvest_observations(self) -> None:
+        """Record the filled Observations, oldest epoch first; never waits."""
+        with self._lock:
+            while self._pending_obs and observation_ready(self._pending_obs[0]):
+                vals = self._pending_obs.pop(0).get
+                if vals["rows"] > 0:
+                    self.metrics.record_observed(
+                        {k: v for k, v in vals.items() if k != "rows"}
+                    )
+
+    def _ours(self, run_id) -> bool:
+        # The session's listener bus carries every query's events; events
+        # that arrive before start() has returned wait for the run id.
+        return self._started.wait(30) and str(run_id) == self._run_id
+
+    def _on_progress(self, progress) -> None:
+        if not self._ours(progress.runId):
+            return
+        rows = progress.numInputRows
+        with self._lock:
+            self._in_flight = {e for e in self._in_flight if e > progress.batchId}
+            process_s = self._process_s.pop(progress.batchId, None)
+            if rows > 0:
+                self._last_data = time.monotonic()
+        if rows > 0:
+            if process_s is not None:  # None: process() raised
+                self.metrics.record_batch(rows, process_s)
+            self.metrics.record_phases(progress.durationMs)
+        self._harvest_observations()
+
+    def _on_terminated(self, event) -> None:
+        if self._ours(event.runId):
+            self._terminated.set()
 
     def run(self, deadline: float | None = None) -> tuple[CloseReason, list[BaseException]]:
         start = time.monotonic()
         self.metrics.reset()
-        self._note_data()
+        self._started.clear()
+        self._terminated.clear()
+        with self._lock:
+            self._last_data = start
+            self._in_flight.clear()
+            self._process_s.clear()
+            self._pending_obs.clear()
 
         writer = (
             self.source_df.writeStream.outputMode("append")
             .trigger(**self._trigger)
             .foreachBatch(self._foreach_batch)
         )
-        self.query = writer.start()
+        listener = _ProgressListener(self)
+        self.spark.streams.addListener(listener)
+        try:
+            try:
+                self.query = writer.start()
+                self._run_id = self.query.runId
+            finally:
+                self._started.set()
+            self._watch(start, deadline)
+            # The terminated event follows the run's last progress event
+            # on the listener bus, so once it is in every epoch is counted.
+            self._terminated.wait(timeout=10)
+        finally:
+            self.spark.streams.removeListener(listener)
+        self._drain_observations(timeout=5)
+        # fold a terminal streaming exception into the error list
+        exc = None
+        try:
+            exc = self.query.exception()
+        except Exception:
+            pass
+        if exc is not None:
+            self._errors.append(CollectError(str(exc), cause=exc))
+        self.metrics.set_total_duration(time.monotonic() - start)
+        return self._reason, list(self._errors)
 
+    def _watch(self, start: float, deadline: float | None) -> None:
         # Idle watchdog (SURVEY.md §4 item 1): counts only data-carrying
-        # progress; empty micro-batches do not reset the clock.
+        # progress; empty micro-batches do not reset the clock, and an
+        # epoch in flight holds it.
         hard_deadline = None if deadline is None else start + deadline
         try:
             while self.query.isActive:
                 if self._stop_requested.is_set():
                     self.query.stop()
                     break
-                with self._last_data_lock:
+                with self._lock:
+                    busy = bool(self._in_flight)
                     idle_for = time.monotonic() - self._last_data
-                if idle_for > self.config.idle_time:
+                if not busy and idle_for > self.config.idle_time:
                     self._set_reason(CloseReason.IDLE_TIMEOUT)
                     self.metrics.record_idle(idle_for)
                     self.query.stop()
@@ -439,16 +570,19 @@ class StreamingPipeline:
         finally:
             if self.query.isActive:
                 self.query.stop()
-        # fold a terminal streaming exception into the error list
-        exc = None
-        try:
-            exc = self.query.exception()
-        except Exception:
-            pass
-        if exc is not None:
-            self._errors.append(CollectError(str(exc), cause=exc))
-        self.metrics.set_total_duration(time.monotonic() - start)
-        return self._reason, list(self._errors)
+
+    def _drain_observations(self, timeout: float) -> None:
+        # Observations still unfilled when the query ends get a bounded
+        # wait; any left after it are dropped.
+        limit = time.monotonic() + timeout
+        while True:
+            self._harvest_observations()
+            with self._lock:
+                if not self._pending_obs:
+                    return
+            if time.monotonic() >= limit:
+                return
+            time.sleep(0.01)
 
     def stop(self) -> None:
         self._stop_requested.set()

@@ -200,6 +200,26 @@ def test_idle_ratio():
     assert 0 < ratio < 1  # reference :351-357
 
 
+def test_idle_ratio_busy_processor():
+    """Idle and processing are disjoint: with collect always ready the
+    processor never waits, so a busy process reads as nearly no idle
+    (idle used to be the inter-arrival gap, which held process time)."""
+    sent = [0]
+
+    def collect(p):
+        if sent[0] == 10:
+            raise StopPipeline()
+        sent[0] += 1
+        return [{"id": sent[0]}]
+
+    pipe = make_pipeline(collect, lambda p, b: time.sleep(0.05), max_workers=2)
+    reason, errors = pipe.run(deadline=10)
+    assert reason is CloseReason.COLLECT_CANCEL and errors == []
+    m = pipe.get_current_metrics()
+    assert m.batch_count == 10
+    assert m.get_idle_ratio() < 0.2
+
+
 # -- high load metrics (reference :361-411) ------------------------------
 
 

@@ -577,6 +577,24 @@ def test_streaming_curation_matches_batch(spark, sf_dir, tmp_path):
     assert 0 < len(b_rows) < docs.count()
 
 
+def test_gate_exprs_built_once_per_gateway(spark, monkeypatch):
+    """The gate's Column lists are built once per JVM gateway and shared:
+    every call returns the same tuple until the gateway changes."""
+    from pyspark import SparkContext
+
+    from asyncdatapipeline_spark.llm.filtering import split_exprs
+    from asyncdatapipeline_spark.llm.text import quality_exprs
+
+    for exprs in (quality_exprs, split_exprs):
+        first = exprs()
+        assert isinstance(first, tuple) and exprs() is first
+        monkeypatch.setattr(SparkContext, "_gateway", object())
+        rebuilt = exprs()
+        assert rebuilt is not first and len(rebuilt) == len(first)
+        monkeypatch.undo()
+        assert exprs() is not rebuilt and exprs() is exprs()
+
+
 def test_streaming_incremental_dedup_matches_batch(spark, sf_dir, tmp_path):
     """New documents streamed micro-batch-by-micro-batch against the
     persisted signature store must find exactly the pairs the batch
