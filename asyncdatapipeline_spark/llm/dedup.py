@@ -34,6 +34,7 @@ SELECT
 FROM documents
 GROUP BY md5(text)
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact text dedup via content-hash groupBy (B56).
@@ -43,7 +44,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference between shuffling hashes and shuffling the corpus.
     md5 is content-addressing here, not security.
     """
-    d = load_table(spark, sf_dir, "documents", parallelize=False)
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.groupBy(F.md5(F.col("text").cast("binary")).alias("text_hash"))
         .agg(
@@ -2983,6 +2984,7 @@ FROM k GROUP BY 1
 ORDER BY n_docs DESC, canonical_url
 LIMIT {_URL_TOP_K}
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization dedup — the stage every web-corpus
@@ -3002,7 +3004,7 @@ def q_dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle until the final grouped count), then one map-combinable
     reduce on the canonical key and a TakeOrderedAndProject top-{k}.
     """
-    d = load_table(spark, sf_dir, "documents", parallelize=False)
+    d = load_table(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("HTTPS://"),
         F.when(F.col("doc_id") % 2 == 0, F.upper("source")).otherwise(

@@ -278,6 +278,7 @@ SELECT doc_id,
        END AS split
 FROM documents
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_split_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic train/valid/test assignment from md5(doc_id)'s
@@ -293,7 +294,7 @@ def q_split_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the split column is written at ingest and downstream reads partition
     on it.
     """
-    d = load_table(spark, sf_dir, "documents", parallelize=False)
+    d = load_table(spark, sf_dir, "documents")
     return d.select("doc_id", *split_exprs())
 
 

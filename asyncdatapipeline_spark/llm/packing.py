@@ -40,6 +40,7 @@ SELECT source,
 FROM o
 GROUP BY source, pack_id
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concat-and-chunk sequence packing into fixed token budgets
@@ -59,7 +60,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-shard document order (packing semantics are per-shard by
     construction in a sharded corpus).
     """
-    d = load_table(spark, sf_dir, "documents", parallelize=False)
+    d = load_table(spark, sf_dir, "documents")
     n_tok = F.size(F.split(F.col("text"), " "))
     w = (
         W.partitionBy("source")

@@ -1645,6 +1645,7 @@ SELECT p.label, p.n_vecs, p.n_correct,
 FROM per p LEFT JOIN wrong w USING (label)
 ORDER BY p.label
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_ml_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-centroid (Rocchio) classification of every embedding
@@ -1665,10 +1666,7 @@ def q_ml_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     Confusion and accuracy are map-combinable integer reduces on the
     |labels|² frame.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    e = load_table(spark, sf_dir, "embeddings", parallelize=False)
+    e = load_table(spark, sf_dir, "embeddings")
     cells = e.select(
         "vec_id", "label", F.posexplode("embedding").alias("pos0", "xf")
     ).select(
@@ -3035,6 +3033,7 @@ SELECT n.label, n.n_a, n.n_b, d.n_dims,
 FROM n JOIN d USING (label)
 ORDER BY n.label
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_embed_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid drift between two deterministic corpus halves
@@ -3051,7 +3050,7 @@ def q_embed_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid difference and the 12dp-snapped square live on the
     bounded (label, dim) frame; output is label-sized.
     """
-    e = load_table(spark, sf_dir, "embeddings", parallelize=False)
+    e = load_table(spark, sf_dir, "embeddings")
     x = e.select(
         "label",
         (F.col("vec_id") % 2).alias("half"),

@@ -3223,6 +3223,7 @@ SELECT source, n1 AS n_tokens, CAST(n2 AS BIGINT) AS n_rest_tokens, vocab,
          AS jsd_normalized
 FROM j ORDER BY source
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jensen-Shannon divergence of each source's unigram distribution
@@ -3245,10 +3246,7 @@ def q_text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Degenerate guard: a single-source corpus has no "rest" and emits
     NULL divergences, not a division crash.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    d = load_table(spark, sf_dir, "documents", parallelize=False)
+    d = load_table(spark, sf_dir, "documents")
     w = d.select(
         "source", F.explode(F.split("text", " ")).alias("word")
     ).filter(F.col("word") != "")
@@ -3454,6 +3452,7 @@ SELECT s.source, d.n_docs, s.n_tokens, s.n_types,
 FROM per_src s JOIN docavg d USING (source)
 ORDER BY s.source
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_text_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lexical-diversity panel per source: corpus TTR (types/tokens),
@@ -3475,7 +3474,7 @@ def q_text_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the doc mean; a one-token source gets NULL Herdan (ln 1 = 0
     denominator), not a crash.
     """
-    d = load_table(spark, sf_dir, "documents", parallelize=False)
+    d = load_table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id", "source", F.explode(F.split("text", " ")).alias("word")
     ).filter(F.col("word") != "")
@@ -4561,6 +4560,7 @@ SELECT thr.n_top, thr.v AS vocab_size, thr.t AS total_occ,
 FROM c JOIN thr ON c.rk = thr.target
 ORDER BY thr.n_top
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary coverage curve: the share of all token occurrences
@@ -4579,7 +4579,7 @@ def q_text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from asyncdatapipeline_spark.operators._util import dist_cumsum
 
-    d = load_table(spark, sf_dir, "documents", parallelize=False)
+    d = load_table(spark, sf_dir, "documents")
     w = d.select(F.explode(F.split("text", " ")).alias("word")).filter(
         F.col("word") != ""
     )

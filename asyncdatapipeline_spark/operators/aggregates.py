@@ -878,6 +878,7 @@ SELECT
   true AS intersection_within_5pct,
   true AS difference_within_25pct
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_agg_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theta-sketch set operations (Spark 4 datasketches): mergeable
@@ -902,10 +903,7 @@ def q_agg_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     The final algebra is a crossJoin of two 1-row frames (sanctioned
     O(1) pattern, q_join_theta rule).
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    o = load_table(spark, sf_dir, "orders")
 
     def segment(status: str, name: str) -> DataFrame:
         partials = (
@@ -995,6 +993,7 @@ FROM lineitem
 GROUP BY l_returnflag
 ORDER BY l_returnflag
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_agg_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable KLL quantile sketches (Spark 4 datasketches) —
@@ -1015,7 +1014,7 @@ def q_agg_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
     around the exact percentiles (KLL k=200 ⇒ ~1.7% rank error;
     the band is deliberately loose so the boolean is stable).
     """
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
+    li = load_table(spark, sf_dir, "lineitem")
     cells = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.kll_sketch_agg_double("l_quantity").alias("sk")
     )
@@ -1350,6 +1349,7 @@ SELECT event_type,
        true AS sketch_top5_exact
 FROM r GROUP BY event_type ORDER BY event_type
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_agg_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy hitters / frequency sketch (completes the mergeable-sketch
@@ -1379,7 +1379,7 @@ def q_agg_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     cells = e.groupBy("event_type", F.month("ts").alias("m")).agg(
         F.expr("approx_top_k_accumulate(user_id, 10000)").alias("st")
     )
@@ -3334,6 +3334,7 @@ SELECT nn AS n,
                     * (nn * (nn - 1.0) / 2 - n2)), 6) AS kendall_tau_b
 FROM pairs, marg, marg2
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_agg_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kendall's tau-b between quantity and discount — the third rank
@@ -3354,10 +3355,7 @@ def q_agg_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     size is data-independent — the canonical "aggregate first, then
     quadratic on the aggregate" device (q_ts_theilsen's pattern).
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
+    li = load_table(spark, sf_dir, "lineitem")
     cells = (
         li.select(
             F.col("l_quantity").alias("x"), F.col("l_discount").alias("y")
@@ -6192,6 +6190,7 @@ SELECT r AS o_orderpriority, col AS o_orderstatus, obs,
          AS significant
 FROM x ORDER BY o_orderpriority, o_orderstatus
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_agg_xtab_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contingency-table cell diagnostics: standardized and adjusted
@@ -6207,10 +6206,7 @@ def q_agg_xtab_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic is closed-form on exact integers. Nothing downstream
     of the first reduce is data-sized.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    o = load_table(spark, sf_dir, "orders")
     c = o.groupBy(
         F.col("o_orderpriority").alias("r"),
         F.col("o_orderstatus").alias("col"),
@@ -6653,18 +6649,21 @@ m AS (
      + 6 * (sx / n) * (sx / n) * (sxx / n)
      - 3 * (sx / n) * (sx / n) * (sx / n) * (sx / n))
       / ((sxx / n - (sx / n) * (sx / n)) * (sxx / n - (sx / n) * (sx / n)))
-      - 3 AS g2
+      - 3 AS g2,
+    sxx / n - (sx / n) * (sx / n) > 0 AS okm
   FROM s
 )
 SELECT l_returnflag, n,
-       round(g1, 6) AS skewness,
-       round(g2, 6) AS excess_kurtosis,
-       round((g1 * g1 + 1)
-             / (g2 + 3.0e0 * (n - 1) * (n - 1) / ((n - 2) * (n - 3))),
-             6) AS bc,
-       (g1 * g1 + 1)
-         / (g2 + 3.0e0 * (n - 1) * (n - 1) / ((n - 2) * (n - 3)))
-         > 0.5555555555555556e0 AS bimodal_leaning
+       CASE WHEN okm THEN round(g1, 6) END AS skewness,
+       CASE WHEN okm THEN round(g2, 6) END AS excess_kurtosis,
+       CASE WHEN okm AND n > 3 THEN
+         round((g1 * g1 + 1)
+               / (g2 + 3.0e0 * (n - 1) * (n - 1) / ((n - 2) * (n - 3))),
+               6) END AS bc,
+       CASE WHEN okm AND n > 3 THEN
+         (g1 * g1 + 1)
+           / (g2 + 3.0e0 * (n - 1) * (n - 1) / ((n - 2) * (n - 3)))
+           > 0.5555555555555556e0 END AS bimodal_leaning
 FROM m ORDER BY l_returnflag
 """,
 )
@@ -6707,13 +6706,17 @@ def q_agg_bimodality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) / (m2 * m2) - 3
     corr = 3.0 * (n - 1) * (n - 1) / ((n - 2) * (n - 3))
     bc = (g1 * g1 + 1) / (g2 + corr)
+    # Undefined statistics come back NULL, never DIVIDE_BY_ZERO: a
+    # constant group has no moments, and BC's correction needs n > 3.
+    okm = m2 > 0
+    okb = okm & (F.col("n") > 3)
     return s.select(
         "l_returnflag",
         "n",
-        F.round(g1, 6).alias("skewness"),
-        F.round(g2, 6).alias("excess_kurtosis"),
-        F.round(bc, 6).alias("bc"),
-        (bc > 5.0 / 9.0).alias("bimodal_leaning"),
+        F.when(okm, F.round(g1, 6)).alias("skewness"),
+        F.when(okm, F.round(g2, 6)).alias("excess_kurtosis"),
+        F.when(okb, F.round(bc, 6)).alias("bc"),
+        F.when(okb, bc > 5.0 / 9.0).alias("bimodal_leaning"),
     ).orderBy("l_returnflag")
 
 

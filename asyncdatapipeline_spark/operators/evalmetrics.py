@@ -1349,6 +1349,7 @@ SELECT bin, n, n_bad, round(woe9, 6) AS woe, iv.iv AS iv_total
 FROM x CROSS JOIN iv
 ORDER BY bin
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_feature_woe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weight of Evidence + Information Value of a categorical feature
@@ -1365,7 +1366,7 @@ def q_feature_woe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_agg_entropy device) and IV terms are decimal-summed so the
     result is partitioning- and order-independent.
     """
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    o = load_table(spark, sf_dir, "orders")
     c = o.groupBy(F.col("o_orderpriority").alias("bin")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(
@@ -1464,6 +1465,7 @@ SELECT seg AS c_mktsegment, n,
        (lor - 1.96 * se > 0 OR lor + 1.96 * se < 0) AS significant
 FROM x ORDER BY c_mktsegment
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_ml_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exposure-outcome odds ratio per market segment (exposure =
@@ -1480,8 +1482,8 @@ def q_ml_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE map-combinable pass to four counters per segment; everything
     after is closed-form on the |segments| grid.
     """
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
-    c = load_table(spark, sf_dir, "customer", parallelize=False)
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     j = o.join(
         F.broadcast(c.select("c_custkey", "c_mktsegment")),
         o.o_custkey == c.c_custkey,
@@ -1580,6 +1582,7 @@ SELECT b.bin, b.n,
 FROM b JOIN iso ON iso.k = b.bin
 ORDER BY b.bin
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_ml_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact isotonic (monotone non-decreasing) regression of the
@@ -1598,10 +1601,7 @@ def q_ml_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two minimax reduces all live on bounded frames — no window,
     no sort, no iteration, no driver state.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
+    li = load_table(spark, sf_dir, "lineitem")
     b = li.groupBy(
         F.col("l_quantity").cast("int").alias("bin")
     ).agg(

@@ -69,7 +69,13 @@ LIMIT {_PR_TOP_K}
 """
 
 
-@query("q_graph_pagerank", oracle=_pagerank_oracle())
+# Scan repair off (r13, measured): the r12 "repair ON is
+# neutral-to-better here" A/B predates the pairs checkpoint below —
+# with the loop reading the checkpoint, the scans feed the join's
+# keyed exchange exactly once and the repair's round-robin is a
+# pure extra barrier (the standard opt-out class). Interleaved
+# same-session A/B at sf0.1: ON 4.19 s vs OFF 3.67 s medians.
+@query("q_graph_pagerank", oracle=_pagerank_oracle(), scan_repair=False)
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-point PageRank over the customer↔supplier trade graph
     (north star: iterative graph analytics): {iters} power-iteration
@@ -92,14 +98,8 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
       micro-unit/op floor leak is identical in both engines and
       irrelevant to ranking.
     """
-    # Repair opt-out (r13, measured): the r12 "repair ON is
-    # neutral-to-better here" A/B predates the pairs checkpoint below —
-    # with the loop reading the checkpoint, the scans feed the join's
-    # keyed exchange exactly once and the repair's round-robin is a
-    # pure extra barrier (the standard opt-out class). Interleaved
-    # same-session A/B at sf0.1: ON 4.19 s vs OFF 3.67 s medians.
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
     # Materialized ONCE (lazy localCheckpoint, inside this query's own
     # action — nothing persists across runs): the unrolled 3-round plan
     # embeds this join+distinct subtree ~8x (edges, deg, nodes, base,
@@ -1955,6 +1955,7 @@ SELECT k AS degree,
        round(CAST(sum(dv) AS DOUBLE) / count(*) / k, 6) AS knn_over_k
 FROM e GROUP BY k ORDER BY k
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_graph_neighbor_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Average neighbor degree per degree class k̄nn(k) over the
@@ -1972,8 +1973,8 @@ def q_graph_neighbor_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized), and the final reduce is a bounded degree-class
     grid of exact integer sums — map-combinable end to end.
     """
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
     pairs = (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .select(

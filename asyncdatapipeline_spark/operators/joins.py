@@ -221,6 +221,7 @@ SELECT
      AND o.o_orderdate <= date_trunc('second', e.ts)) AS last_order_date
 FROM events e
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: most recent order per user at or before each event
@@ -235,11 +236,8 @@ def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     Event timestamps are second-truncated on both sides so the ns-parquet
     vs µs-Spark precision difference cannot skew the comparison.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    e = load_table(spark, sf_dir, "events", parallelize=False)
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
+    o = load_table(spark, sf_dir, "orders")
     od = o.select(
         F.col("o_custkey").alias("k"),
         F.col("o_orderdate").alias("t"),
@@ -437,6 +435,7 @@ WHERE c.c_custkey = o.o_custkey
 GROUP BY n_name
 ORDER BY n_name
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Six-table TPC-H-Q5-shape join: local-supplier revenue per nation
@@ -455,19 +454,14 @@ def q_join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer⋈(order-line-supplier) join as an equi-key, not a
     post-filter.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    o = load_table(spark, sf_dir, "orders", parallelize=False).filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp")
     )
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
-    c = load_table(spark, sf_dir, "customer", parallelize=False)
-    s = load_table(spark, sf_dir, "supplier", parallelize=False)
-    n = load_table(spark, sf_dir, "nation", parallelize=False)
-    r = load_table(
-        spark, sf_dir, "region", parallelize=False
-    ).filter(F.col("r_name") == "ASIA")
+    li = load_table(spark, sf_dir, "lineitem")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nr = n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
     line_supp = li.join(s, li.l_suppkey == s.s_suppkey).join(
         F.broadcast(nr), F.col("s_nationkey") == nr.n_nationkey
@@ -1843,6 +1837,7 @@ SELECT dirty_id, p_partkey AS matched_key, shared, na, nb,
        round(jac, 6) AS jaccard
 FROM best WHERE rn = 1 ORDER BY dirty_id
 """.format(cap=_TRIGRAM_DF_CAP, tau=_TRIGRAM_TAU),
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_join_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trigram set-similarity join (Jaccard ≥ 0.5, best match per
@@ -1863,10 +1858,7 @@ def q_join_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets of the generated candidates; best-match is one
     WindowGroupLimit. All joins are equi joins on the gram key.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    p = load_table(spark, sf_dir, "part", parallelize=False)
+    p = load_table(spark, sf_dir, "part")
     base = p.select("p_partkey", F.col("p_name").alias("nm")).filter(
         F.length("nm") >= 3
     )

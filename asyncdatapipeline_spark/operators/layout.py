@@ -328,6 +328,7 @@ SELECT e.event_type, COUNT(*) AS n_events, {sql_dsum('e.value', 'sum_value')}
 FROM events e JOIN dim d ON CAST(e.ts AS DATE) = d.event_date
 GROUP BY e.event_type
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition pruning: fact partitions pruned at RUNTIME by a
@@ -347,17 +348,14 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     path = ensure_partitioned_events(spark, sf_dir)
     schema = (
-        # Repair opt-out: the scan feeds a keyed exchange directly, so the
-        # repair's round-robin shuffle is a pure extra barrier here (r12
-        # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-        load_table(spark, sf_dir, "events", parallelize=False)
+        load_table(spark, sf_dir, "events")
         .withColumn("event_date", F.to_date("ts"))
         .schema
     )
     fact = spark.read.schema(schema).parquet(path)
 
     per_day = (
-        load_table(spark, sf_dir, "events", parallelize=False)
+        load_table(spark, sf_dir, "events")
         .groupBy(F.to_date("ts").alias("event_date"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -396,6 +394,12 @@ WHERE p.p_brand = 'Brand#1' AND p.p_size <= 25
 GROUP BY l.l_returnflag
 ORDER BY l.l_returnflag
 """,
+    # Plan-shape contract, on BOTH sides: InjectRuntimeFilter
+    # pattern-matches a selective filter over the creation-side SCAN and
+    # plants might_contain on the application-side SCAN; the repair's
+    # Repartition in either subtree stops the rewrite (plan-audited
+    # `might_contain`).
+    scan_repair=False,
 )
 def q_join_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Runtime bloom-filter join pushdown — the NON-partitioned sibling
@@ -416,16 +420,8 @@ def q_join_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     The bloom filter only prunes — results are conf-independent, so the
     oracle is the plain join.
     """
-    # parallelize=False: InjectRuntimeFilter pattern-matches the fact
-    # SCAN under the join; the repair's Repartition between them stops
-    # the bloom filter from landing (plan-audited `might_contain`)
-    # parallelize=False on BOTH sides: InjectRuntimeFilter
-    # pattern-matches a selective filter over the creation-side SCAN
-    # and plants might_contain on the application-side SCAN; the
-    # repair's Repartition in either subtree stops the rewrite
-    # (plan-audited `might_contain`)
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
-    pt = load_table(spark, sf_dir, "part", parallelize=False).filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    pt = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") == "Brand#1") & (F.col("p_size") <= 25)
     )
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))

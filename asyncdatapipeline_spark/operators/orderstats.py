@@ -1475,6 +1475,7 @@ SELECT cust.n_customers, s.n_repeat,
 FROM cust CROSS JOIN s
 WHERE cust.n_customers > 0 AND s.n_repeat > 0
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_orders_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repeat-purchase dynamics: share of customers who ever order
@@ -1493,10 +1494,7 @@ def q_orders_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort buffer and no single-partition window at any customer count.
     Zero-repeat corpora emit nothing (rate undefined), never 0/0.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    o = load_table(spark, sf_dir, "orders")
     day = F.floor(F.unix_timestamp("o_orderdate") / 86400).cast("long")
     w = W.partitionBy("o_custkey").orderBy("day", "o_orderkey")
     r = o.select("o_custkey", day.alias("day"), "o_orderkey").withColumn(
@@ -1586,6 +1584,7 @@ SELECT s.prio AS o_orderpriority, s.n AS n_lines,
         FROM c WHERE c.prio = s.prio) AS p90_days
 FROM s ORDER BY o_orderpriority
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_orders_leadtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-to-ship lead time per order priority: exact mean, median
@@ -1604,11 +1603,8 @@ def q_orders_leadtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dist_cumsum(part_cols=[priority])`` → integer-rank selections —
     no per-group sort buffer at any fact size.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
     sday = F.floor(F.unix_timestamp("l_shipdate") / 86400).cast("long")
     oday = F.floor(F.unix_timestamp("o_orderdate") / 86400).cast("long")
     lt = li.join(o, li.l_orderkey == o.o_orderkey).select(

@@ -1014,6 +1014,7 @@ SELECT expectation, kind, n_checked, n_violations,
 FROM rules WHERE n_checked > 0
 ORDER BY expectation
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tolerance-based expectation suite over the orders table — the
@@ -1035,7 +1036,7 @@ def q_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluate it against the same fixture horizon (all fixture dates
     are in the past), so the timeliness count is deterministically 0.
     """
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    o = load_table(spark, sf_dir, "orders")
     s = o.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.col("o_totalprice").isNull().cast("long"))

@@ -161,6 +161,11 @@ SELECT l_orderkey, l_linenumber, measure, value FROM (
   FROM lineitem WHERE l_orderkey < 100
 )
 """,
+    # Plan-shape contract: the operator IS the map-only plan (scan →
+    # Expand, zero Exchange — plan-audited); the scan repair's exchange
+    # would break that shape, and the pushed orderkey filter leaves ~100
+    # rows anyway.
+    scan_repair=False,
 )
 def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot / melt — wide→long reshaping (relational surface).
@@ -172,13 +177,7 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expand reads the input once where the UNION ALL form scans it four
     times.
     """
-    # parallelize=False: the operator's contract IS the map-only plan
-    # (scan → Expand, zero Exchange — plan-audited); the scan repair's
-    # exchange would break that shape, and the pushed orderkey filter
-    # leaves ~100 rows anyway
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False).filter(
-        F.col("l_orderkey") < 100
-    )
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 100)
     return li.unpivot(
         ["l_orderkey", "l_linenumber"],
         ["l_quantity", "l_extendedprice", "l_discount", "l_tax"],

@@ -650,6 +650,10 @@ def q_scan_json_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     # semantics are instead pinned by the planted pytest, which writes
     # a known 3-file layout (one file deliberately tiny) and asserts
     # the exact per-file rows and the small-file flag.
+    #
+    # Row identity: input_file_name() evaluates above the scan repair's
+    # exchange and would return '' for every row.
+    scan_repair=False,
 )
 def q_scan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Physical-layout profile: per-file row counts of the lineitem
@@ -668,9 +672,7 @@ def q_scan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``filename=true``, so the two engines audit the same layout —
     basenames normalized across the file:-URI dialect difference.
     """
-    # parallelize=False: input_file_name() evaluates above the scan
-    # repair's exchange and would return '' for every row
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
+    li = load_table(spark, sf_dir, "lineitem")
     f = (
         li.select(
             F.regexp_extract(

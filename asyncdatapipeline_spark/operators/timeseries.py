@@ -328,6 +328,7 @@ SELECT CAST(r.cohort_week AS TIMESTAMP) AS cohort_week,
 FROM ret r JOIN cohort_sizes c USING (cohort_week)
 ORDER BY cohort_week, week_offset
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention (B70 family): users grouped by first-seen week,
@@ -342,10 +343,7 @@ def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     a second shuffle, and per-user state is one timestamp, so a bot key
     cannot skew anything (contrast q_funnel's sequence build).
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     firsts = e.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).alias("cohort_week")
     )
@@ -3358,6 +3356,7 @@ SELECT t.event_type, CAST(t.day AS VARCHAR) AS day, t.y,
 FROM tr t JOIN seas s ON s.event_type = t.event_type AND s.dow = t.dow
 ORDER BY t.event_type, t.day
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_ts_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classical decomposition of each event-type daily series into
@@ -3378,7 +3377,7 @@ def q_ts_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     without a full 7-day window are excluded, not zero-padded (padding
     biases the trend at both ends).
     """
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     e.createOrReplaceTempView("dec_events")
     return spark.sql(
         f"""
@@ -5099,6 +5098,7 @@ FROM u ORDER BY direction
         ),
         next_day="prev.day + INTERVAL 1 DAY",
     ),
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_ts_granger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Granger causality (lag-1) between the view and purchase daily
@@ -5120,10 +5120,7 @@ def q_ts_granger(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed forms (2×2 normal equations, no iteration) on ONE row of
     centered moments.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     e.createOrReplaceTempView("granger_events")
     return spark.sql(
         _GRANGER_SQL_BODY.format(
@@ -6443,6 +6440,7 @@ SELECT n AS n_days, s_stat, CAST(var18 AS BIGINT) AS var_num18,
             WHEN var18 > 0 THEN 'no_trend' END AS trend
 FROM v
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall trend test on the dense daily event-volume series —
@@ -6461,7 +6459,7 @@ def q_ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of whether the table is 10 GB or 100 TB); S, ties and
     the variance numerator are exact integers, z the one IEEE chain.
     """
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("day")
     ).agg(F.count(F.lit(1)).alias("c"))
@@ -7277,6 +7275,7 @@ SELECT (SELECT CAST(cutoff - d0 AS BIGINT) FROM b) AS n_train_days,
             THEN round(CAST(mape_sum AS DOUBLE) / n_pos, 6) END AS mape
 FROM m WHERE n_eval > 0
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_ts_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-naive (lag-7) forecast backtest over daily event
@@ -7297,7 +7296,7 @@ def q_ts_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     into DECIMAL before summing (order-proof). One closed-form row
     out.
     """
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("day")
     ).agg(F.count(F.lit(1)).alias("c"))
@@ -7417,6 +7416,7 @@ SELECT event_type, n_days, s AS n_events,
               ELSE 'poisson_like' END END AS verdict
 FROM k ORDER BY event_type
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_agg_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson overdispersion test per event type: the index of
@@ -7435,7 +7435,7 @@ def q_agg_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Degenerate guards: single-day spans and all-zero types emit NULL
     statistics, not a division crash.
     """
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         "event_type",
         F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("day"),
@@ -7690,6 +7690,7 @@ f AS (
 SELECT day, dow, c AS n_events, expected, z, direction
 FROM f ORDER BY az DESC, day LIMIT 10
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_anomaly_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week-adjusted volume anomalies: each day scored against
@@ -7709,7 +7710,7 @@ def q_anomaly_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared IEEE |z| key. Degenerate guards: strata with n ≤ 1 or zero
     variance contribute no anomalies (NULL-safe, no division crash).
     """
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("day")
     ).agg(F.count(F.lit(1)).alias("c"))
@@ -9637,6 +9638,7 @@ SELECT grp AS o_orderpriority, tot AS n_windows, n_patterns,
        round(h / {_PE_LN6_9}, 6) AS normalized
 FROM e ORDER BY o_orderpriority
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_ts_perm_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Permutation entropy (order 3) of each priority class's daily
@@ -9656,7 +9658,7 @@ def q_ts_perm_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤6-row-per-group pattern grid. Exact decimal revenue sums make
     every ordinal comparison partitioning-independent.
     """
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    o = load_table(spark, sf_dir, "orders")
     d = o.groupBy(
         F.col("o_orderpriority").alias("grp"),
         F.expr(
@@ -9746,6 +9748,7 @@ SELECT grp AS o_orderpriority, n AS n_days,
 FROM r WHERE i = len(xs)
 ORDER BY o_orderpriority
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_ts_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt double-exponential smoothing (level + trend) of each
@@ -9764,7 +9767,7 @@ def q_ts_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract as q_ts_sax's per-series arrays). Groups parallelize
     across the cluster; 10⁶ series = 10⁶ independent folds.
     """
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    o = load_table(spark, sf_dir, "orders")
     d = o.groupBy(
         F.col("o_orderpriority").alias("grp"),
         F.expr(
@@ -9868,6 +9871,7 @@ SELECT event_type, n_days,
             - r1 * (1 - r2) / nullif(1 - r1 * r1, 0) < 1) AS stationary
 FROM r ORDER BY event_type
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_ts_yule_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Yule-Walker AR(2) fit per event type: lag-1/lag-2 sample
@@ -9886,7 +9890,7 @@ def q_ts_yule_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free; lag windows ride bounded-vocab keys over the bounded
     day spine; the solve is closed-form per group.
     """
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         "event_type",
         F.expr("cast(floor(unix_timestamp(ts) / 86400) as bigint)").alias(
@@ -10389,6 +10393,7 @@ SELECT grp AS o_orderpriority, nd AS n_demand_days,
        round(z_hat / tau_hat, 6) AS croston_rate
 FROM f ORDER BY o_orderpriority
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_orders_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Croston's method per priority class: exponential smoothing of
@@ -10404,10 +10409,7 @@ def q_orders_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     key; the two folds run per group over calendar-bounded arrays
     (the q_ts_holt contract) — series parallelize across the cluster.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
+    o = load_table(spark, sf_dir, "orders")
     d = o.groupBy(
         F.col("o_orderpriority").alias("grp"),
         F.expr(
@@ -10516,6 +10518,7 @@ SELECT event_type, level, n_blocks,
              6) AS energy_share
 FROM e ORDER BY event_type, level
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_ts_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Haar wavelet detail energy of the daily event-count series at
@@ -10536,10 +10539,7 @@ def q_ts_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     device, and the share window partitions by event_type over a
     bounded (type × 3)-row frame.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         "event_type",
         F.floor(F.unix_timestamp("ts").cast("double") / 86400)
@@ -10696,6 +10696,7 @@ SELECT event_type, n1 + 1 AS n_days,
             ELSE 'random_walk_band' END AS verdict
 FROM v ORDER BY event_type
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lo-MacKinlay variance-ratio test per event type: the variance of
@@ -10713,10 +10714,7 @@ def q_ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact-decimal power sums are all spine-sized; the VR verdict
     is closed-form per group.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         "event_type",
         F.floor(F.unix_timestamp("ts").cast("double") / 86400)
@@ -10860,6 +10858,7 @@ SELECT ab.n AS n_days,
          AS cointegrated
 FROM ab, df
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_ts_cointegration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engle-Granger cointegration check between the daily 'view' and
@@ -10880,7 +10879,7 @@ def q_ts_cointegration(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine-sized; both reductions are map-combinable and the final
     frame is ONE row.
     """
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         F.floor(F.unix_timestamp("ts").cast("double") / 86400)
         .cast("long")
@@ -11016,6 +11015,7 @@ SELECT event_type, n_gaps,
             ELSE 'poisson_like' END AS verdict
 FROM m ORDER BY event_type
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_events_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Goh-Barabási burstiness of per-user inter-arrival times, per
@@ -11033,7 +11033,7 @@ def q_events_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-combinable pass of exact integer/decimal power sums onto the
     bounded event_type grid.
     """
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts"))
     g = e.select(
@@ -11142,6 +11142,7 @@ FROM dp JOIN arr USING (event_type)
 WHERE dp.k = 2 * arr.n - 2
 ORDER BY dp.event_type
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_ts_dtw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded dynamic-time-warping distance between each event type's
@@ -11170,7 +11171,7 @@ def q_ts_dtw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd  # noqa: F401  (Arrow batch bridge)
 
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         "event_type",
         F.floor(F.unix_timestamp("ts").cast("double") / 86400)
@@ -11334,6 +11335,7 @@ SELECT event_type, n AS n_days,
 FROM r WHERE i = n
 ORDER BY event_type
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt-Winters additive triple-exponential smoothing of each
@@ -11352,10 +11354,7 @@ def q_ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate-fold carrying (l, b, 7-element seasonal list) — groups
     parallelize across the cluster, state is O(period) per series.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    e = load_table(spark, sf_dir, "events", parallelize=False)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         "event_type",
         F.floor(F.unix_timestamp("ts").cast("double") / 86400)

@@ -70,6 +70,7 @@ GROUP BY l.l_orderkey, o.o_orderdate
 ORDER BY revenue DESC, o.o_orderdate, l.l_orderkey
 LIMIT 10
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 (shipping priority): top-10 unshipped BUILDING-segment
@@ -83,13 +84,13 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving both predicates, and the top-10 plans as
     TakeOrderedAndProject on the 6dp grid.
     """
-    c = load_table(spark, sf_dir, "customer", parallelize=False).filter(
+    c = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    o = load_table(spark, sf_dir, "orders", parallelize=False).filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < _ts("1998-03-15 00:00:00")
     )
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False).filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > _ts("1998-03-15 00:00:00")
     )
     return (
@@ -114,6 +115,7 @@ WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
   AND l_discount BETWEEN 0.05 AND 0.07
   AND l_quantity < 24
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 (forecasting revenue change): the revenue that would
@@ -125,7 +127,7 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantity), no join, ONE map-combinable decimal sum to a single
     row. If this query shuffles anything, the engine is broken.
     """
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= _ts("1997-01-01 00:00:00"))
@@ -160,6 +162,7 @@ WHERE ((ns.n_name = 'NATION_9' AND nc.n_name = 'NATION_3')
   AND l.l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
 GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 (volume shipping): bilateral trade revenue between two
@@ -173,18 +176,14 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     applies after broadcast attachment (map-side), so the only shuffle
     is the final bounded (nation², year) reduce.
     """
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False).filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1996-01-01 00:00:00"))
         & (F.col("l_shipdate") < _ts("1998-01-01 00:00:00"))
     )
-    o = load_table(spark, sf_dir, "orders", parallelize=False).select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer", parallelize=False).select(
-        "c_custkey", "c_nationkey"
-    )
-    s = load_table(spark, sf_dir, "supplier", parallelize=False).select(
-        "s_suppkey", "s_nationkey"
-    )
-    n = load_table(spark, sf_dir, "nation", parallelize=False).select("n_nationkey", "n_name")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     ns = n.select(
         F.col("n_nationkey").alias("snk"), F.col("n_name").alias("supp_nation")
     )
@@ -241,6 +240,7 @@ SELECT o_year,
        round(CAST(sum(volume) AS DOUBLE), 6) AS total_volume
 FROM base GROUP BY 1 ORDER BY 1
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 (national market share): NATION_3's share of PROMO-type
@@ -253,25 +253,16 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional exact-decimal sums on the bounded year grid — never
     two scans for numerator and denominator.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
-    o = load_table(spark, sf_dir, "orders", parallelize=False).filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ts("1996-01-01 00:00:00"))
         & (F.col("o_orderdate") < _ts("1998-01-01 00:00:00"))
     )
-    c = load_table(spark, sf_dir, "customer", parallelize=False).select(
-        "c_custkey", "c_nationkey"
-    )
-    n = load_table(spark, sf_dir, "nation", parallelize=False)
-    r = load_table(spark, sf_dir, "region", parallelize=False).filter(
-        F.col("r_name") == "ASIA"
-    )
-    s = load_table(spark, sf_dir, "supplier", parallelize=False).select(
-        "s_suppkey", "s_nationkey"
-    )
-    p = load_table(spark, sf_dir, "part", parallelize=False).filter(
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    p = load_table(spark, sf_dir, "part").filter(
         F.col("p_type") == "PROMO"
     ).select("p_partkey")
     cust_asia = (
@@ -343,6 +334,7 @@ GROUP BY 1, 2, 4, 5
 ORDER BY revenue DESC, c.c_custkey
 LIMIT 20
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 (returned item reporting): top-20 customers by revenue
@@ -356,15 +348,13 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject on the 6dp revenue grid with a custkey
     tiebreak.
     """
-    c = load_table(spark, sf_dir, "customer", parallelize=False)
-    o = load_table(spark, sf_dir, "orders", parallelize=False).filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ts("1997-01-01 00:00:00"))
         & (F.col("o_orderdate") < _ts("1997-04-01 00:00:00"))
     )
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False).filter(
-        F.col("l_returnflag") == "R"
-    )
-    n = load_table(spark, sf_dir, "nation", parallelize=False).select("n_nationkey", "n_name")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(c, F.col("o_custkey") == F.col("c_custkey"))
@@ -452,6 +442,7 @@ FROM supplier s JOIN rev ON rev.supplier_no = s.s_suppkey
 WHERE rev.total_revenue = (SELECT max(total_revenue) FROM rev)
 ORDER BY s.s_suppkey
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 (top supplier): the supplier(s) whose quarterly
@@ -463,11 +454,11 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelated scalar-subquery shape — equality on the 6dp grid so
     both engines keep identical tie sets), supplier dim broadcast.
     """
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False).filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1997-01-01 00:00:00"))
         & (F.col("l_shipdate") < _ts("1997-04-01 00:00:00"))
     )
-    s = load_table(spark, sf_dir, "supplier", parallelize=False).select("s_suppkey", "s_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     rev = (
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(F.round(dsum(_rev_col(), "r"), 6).alias("total_revenue"))
@@ -501,6 +492,7 @@ GROUP BY 1, 2, 3, 4, 5
 ORDER BY o_totalprice DESC, o.o_orderdate, o.o_orderkey
 LIMIT 100
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 (large volume customer): orders whose total quantity
@@ -514,14 +506,9 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving (tiny) key set joins back co-partitioned, customer
     attaches by broadcast, and the top-100 is TakeOrderedAndProject.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
-    o = load_table(spark, sf_dir, "orders", parallelize=False)
-    c = load_table(spark, sf_dir, "customer", parallelize=False).select(
-        "c_custkey", "c_name"
-    )
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("q"))
@@ -567,6 +554,7 @@ WHERE c.c_acctbal > avg_bal.a
   AND NOT EXISTS (SELECT 1 FROM active WHERE active.o_custkey = c.c_custkey)
 GROUP BY 1 ORDER BY 1
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 (global sales opportunity): customers with
@@ -585,14 +573,14 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-row probe), nation broadcasts, and the reduce lands on the
     bounded country grid.
     """
-    c = load_table(spark, sf_dir, "customer", parallelize=False)
+    c = load_table(spark, sf_dir, "customer")
     o = (
-        load_table(spark, sf_dir, "orders", parallelize=False)
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= _ts("2000-01-01 00:00:00"))
         .select("o_custkey")
         .distinct()
     )
-    n = load_table(spark, sf_dir, "nation", parallelize=False).select("n_nationkey", "n_name")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     avg_bal = F.broadcast(
         c.filter(F.col("c_acctbal") > 0.0).agg(
             (
@@ -634,6 +622,7 @@ WHERE o.o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
   )
 GROUP BY 1 ORDER BY 1
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 (order priority checking): orders placed in one quarter
@@ -650,16 +639,11 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned pass, never a per-row probe; the reduce lands on
     the bounded priority grid.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    o = load_table(spark, sf_dir, "orders", parallelize=False).filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ts("1997-01-01 00:00:00"))
         & (F.col("o_orderdate") < _ts("1997-04-01 00:00:00"))
     )
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False).select(
-        "l_orderkey", "l_shipdate"
-    )
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     late = o.join(
         li,
         (F.col("l_orderkey") == F.col("o_orderkey"))
@@ -691,6 +675,7 @@ SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
 FROM c_orders GROUP BY 1
 ORDER BY custdist DESC, c_count DESC
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 (customer distribution): the histogram of
@@ -708,8 +693,8 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     structural test: losing it means the outer join silently
     degraded.
     """
-    c = load_table(spark, sf_dir, "customer", parallelize=False).select("c_custkey")
-    o = load_table(spark, sf_dir, "orders", parallelize=False).filter(
+    c = load_table(spark, sf_dir, "customer").select("c_custkey")
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
     ).select("o_custkey", "o_orderkey")
     c_orders = (
@@ -737,6 +722,7 @@ WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15
    OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 20 AND 50
        AND l.l_quantity BETWEEN 20 AND 45)
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 (discounted revenue): revenue from lines matching any
@@ -753,13 +739,8 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     OR across scans — pre-filtering the dim to the UNION of part-leg
     matches is the manual half it can't do.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
-    p = load_table(spark, sf_dir, "part", parallelize=False).select(
-        "p_partkey", "p_brand", "p_size"
-    )
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     part_leg = (
         ((F.col("p_brand") == "Brand#1") & F.col("p_size").between(1, 15))
         | ((F.col("p_brand") == "Brand#2") & F.col("p_size").between(10, 30))
@@ -847,9 +828,7 @@ _LSHIP_SQL = """lineitem_ship AS (
 )"""
 
 
-def _partsupp(
-    spark: SparkSession, sf_dir: str, *, parallelize: bool = True
-) -> DataFrame:
+def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derived partsupp (docstring above): 4 suppliers per part via the
     dbgen stride, availqty/supplycost as hash arithmetic on the keys.
 
@@ -867,7 +846,7 @@ def _partsupp(
         )
     )
     return (
-        load_table(spark, sf_dir, "part", parallelize=parallelize)
+        load_table(spark, sf_dir, "part")
         .select("p_partkey")
         .crossJoin(scnt)
         .select(
@@ -1074,6 +1053,7 @@ WHERE r.r_name = 'ASIA'
 GROUP BY n.n_name
 ORDER BY revenue DESC, n.n_name
 """.replace("{d28rev}", "CAST(SUM(CAST((" + _REV + ") AS DECIMAL(28,6))) AS DOUBLE)"),
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 (local supplier volume) under its canonical name —
@@ -1087,24 +1067,15 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     condition (s_nationkey = c_nationkey) evaluates map-side after the
     broadcasts; final reduce is the bounded nation grid.
     """
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
-    o = load_table(spark, sf_dir, "orders", parallelize=False).filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ts("1996-01-01 00:00:00"))
         & (F.col("o_orderdate") < _ts("1997-01-01 00:00:00"))
     )
-    c = load_table(
-        spark, sf_dir, "customer", parallelize=False
-    ).select("c_custkey", "c_nationkey")
-    s = load_table(
-        spark, sf_dir, "supplier", parallelize=False
-    ).select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation", parallelize=False)
-    r = load_table(spark, sf_dir, "region", parallelize=False).filter(
-        F.col("r_name") == "ASIA"
-    )
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
@@ -1140,6 +1111,7 @@ JOIN orders o ON o.o_orderkey = l.l_orderkey
 GROUP BY 1, 2
 ORDER BY nation, o_year DESC
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 (product type profit): profit (revenue minus supply
@@ -1160,25 +1132,16 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-decimal revenue sum MINUS an exact BIGINT cents·qty sum,
     divided once per output row — never two scans.
     """
-    ps = _partsupp(spark, sf_dir, parallelize=False)
+    ps = _partsupp(spark, sf_dir)
     p = (
-        # Repair opt-out: the scan feeds a keyed exchange directly, so the
-        # repair's round-robin shuffle is a pure extra barrier here (r12
-        # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-        load_table(spark, sf_dir, "part", parallelize=False)
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("%red%"))
         .select("p_partkey")
     )
-    s = load_table(
-        spark, sf_dir, "supplier", parallelize=False
-    ).select("s_suppkey", "s_nationkey")
-    n = load_table(
-        spark, sf_dir, "nation", parallelize=False
-    ).select("n_nationkey", "n_name")
-    o = load_table(
-        spark, sf_dir, "orders", parallelize=False
-    ).select("o_orderkey", "o_orderdate")
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    li = load_table(spark, sf_dir, "lineitem")
     cost_qty = F.col("ps_cost_cents") * F.col("l_quantity").cast("bigint")
     # partsupp carries NO broadcast hint on purpose: it is dim-sized on
     # the fixture family (4·|part|), so Catalyst/AQE broadcasts it here
@@ -1415,6 +1378,7 @@ SELECT round(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(28,6))) AS DOUBLE)
 FROM lp l JOIN av ON l.l_partkey = av.l_partkey
 WHERE l.l_quantity < 0.2 * av.avg_qty
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 (small-quantity-order revenue) under its canonical
@@ -1432,15 +1396,12 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row reduce.
     """
     pp = (
-        # Repair opt-out: the scan feeds a keyed exchange directly, so the
-        # repair's round-robin shuffle is a pure extra barrier here (r12
-        # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-        load_table(spark, sf_dir, "part", parallelize=False)
+        load_table(spark, sf_dir, "part")
         .filter((F.col("p_brand") == "Brand#3") & (F.col("p_type") == "SMALL"))
         .select("p_partkey")
     )
     lp = (
-        load_table(spark, sf_dir, "lineitem", parallelize=False)
+        load_table(spark, sf_dir, "lineitem")
         .join(F.broadcast(pp), F.col("l_partkey") == F.col("p_partkey"))
         .select("l_partkey", "l_quantity", "l_extendedprice")
     )

@@ -35,13 +35,11 @@ SELECT
   dense_rank() OVER (PARTITION BY l_suppkey ORDER BY l_quantity DESC) AS drnk
 FROM lineitem
 """,
+    scan_repair=False,  # slower with the repair: keyed exchange after scan (r12 A/B)
 )
 def q_win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """row_number / rank / dense_rank per supplier (B27)."""
-    # Repair opt-out: the scan feeds a keyed exchange directly, so the
-    # repair's round-robin shuffle is a pure extra barrier here (r12
-    # whole-suite A/B, OPTIMIZATION_r12.md "per-query opt-outs").
-    li = load_table(spark, sf_dir, "lineitem", parallelize=False)
+    li = load_table(spark, sf_dir, "lineitem")
     w_unique = W.partitionBy("l_suppkey").orderBy(
         F.col("l_quantity").desc(), "l_orderkey", "l_linenumber"
     )
@@ -1567,6 +1565,7 @@ WHERE NOT EXISTS (
 )
 ORDER BY p.p_size, p.p_partkey
 """,
+    scan_repair=False,  # slower with the repair (r13 A/B, AB_REPAIR_r13.json)
 )
 def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skyline (Pareto frontier) operator — all parts not dominated on
@@ -1586,7 +1585,7 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     min is dominated by that larger size (strict in size, ≤ in
     price). The n² definitional form appears ONLY as the oracle.
     """
-    p = load_table(spark, sf_dir, "part", parallelize=False)
+    p = load_table(spark, sf_dir, "part")
     spine = p.groupBy("p_size").agg(
         F.min("p_retailprice").alias("min_price")
     )

@@ -12,10 +12,13 @@ Contract notes (README of /root/repo/__spark_entry__.py):
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from asyncdatapipeline_spark.sources.tables import SCAN_REPAIR
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -28,16 +31,49 @@ class QueryDef:
     fn: QueryFn
     oracle: str | None  # ANSI SQL for DuckDB; None → rows-only check
     doc: str
+    scan_repair: bool
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a query under ``name`` with an optional DuckDB oracle."""
+def query(
+    name: str, oracle: str | None = None, scan_repair: bool = True
+) -> Callable[[QueryFn], QueryFn]:
+    """Register a query under ``name`` with an optional DuckDB oracle.
+
+    ``scan_repair`` decides whether ``load_table`` may round-robin the
+    query's single-row-group fixture scans (``sources/tables.py``). The
+    decorator returns a wrapper that holds the setting in
+    ``tables.SCAN_REPAIR`` while the body runs, so registry lookups,
+    direct module calls and nested calls (one query building another)
+    each run under their own query's setting. A query sets it False for
+    one of three reasons, stated beside its decorator:
+
+    - measured slower with the repair: its scans feed a keyed exchange
+      or light map work, where the round-robin is a pure extra barrier
+      (the r12 whole-suite A/B and the r13 interleaved A/B,
+      AB_REPAIR_r13.json);
+    - a plan-shape contract the repair's exchange would break (the
+      runtime bloom filter of q_join_bloom, the map-only Expand of
+      q_unpivot);
+    - row identity: ``input_file_name()`` / ``_metadata`` evaluate above
+      the exchange and would come back empty (q_scan_files).
+    """
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query registration: {name}")
-        _REGISTRY[name] = QueryDef(name, fn, oracle, (fn.__doc__ or "").strip())
-        return fn
+
+        @functools.wraps(fn)
+        def build(*args, **kwargs) -> DataFrame:
+            token = SCAN_REPAIR.set(scan_repair)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                SCAN_REPAIR.reset(token)
+
+        _REGISTRY[name] = QueryDef(
+            name, build, oracle, (fn.__doc__ or "").strip(), scan_repair
+        )
+        return build
 
     return deco
 

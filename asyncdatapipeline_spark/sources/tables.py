@@ -15,6 +15,7 @@ same code reads one file or ten thousand.
 from __future__ import annotations
 
 import os
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -41,11 +42,17 @@ from pyspark.sql import DataFrame, SparkSession
 # Catalyst pushes filters and column pruning THROUGH Repartition (the
 # plan keeps PushedFilters/ReadSchema at the scan — verified on the
 # resident build), so the repair costs only the small shuffle.
-# Row-identity scans (input_file_name / _metadata) must opt out:
-# those columns evaluate above the exchange and would come back empty.
-_REPAIR_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SCAN_REPAIR_MAX_BYTES", str(256 << 20))
-)
+#
+# Whether a scan may be repaired is a per-query decision, not a
+# per-call one: ``@query(..., scan_repair=False)`` (registry.py) sets
+# SCAN_REPAIR for the length of that query's build, and every
+# load_table call inside it reads the variable. Outside any query build
+# (pipelines, tests, tools) it is True. The registry.query docstring
+# lists the three reasons a query opts out: measured slower, a
+# plan-shape contract, and row identity (input_file_name / _metadata
+# evaluate above the exchange and would come back empty).
+SCAN_REPAIR: ContextVar[bool] = ContextVar("scan_repair", default=True)
+_REPAIR_MAX_BYTES = 256 << 20
 _REPAIR_MIN_ROWS = 2_000  # below this, 1 task is the right plan
 _FOOTER_CACHE: dict[tuple[str, float], tuple[int, int, int]] = {}
 
@@ -74,7 +81,8 @@ def _repair_parallelism(spark: SparkSession, df: DataFrame, path: str) -> DataFr
     par = spark.sparkContext.defaultParallelism
     # natural parallel read units: one per row group, but a split is
     # only produced per maxPartitionBytes of file — the min of the two
-    natural = min(row_groups, max(1, -(-size // (128 << 20))))
+    split_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    natural = min(row_groups, max(1, -(-size // split_bytes)))
     if natural * 2 >= par:
         return df
     # Round-robin, NOT hash-on-columns: a hash repartition references
@@ -84,8 +92,8 @@ def _repair_parallelism(spark: SparkSession, df: DataFrame, path: str) -> DataFr
     # and pushdown pass through untouched; its determinism local sort
     # (sortBeforeRepartition, kept on) measured within noise of the
     # sort-free hash form — the exchange barrier, not the sort, is the
-    # repair's cost, and per-query opt-outs below handle the operators
-    # where that cost exceeds the parallelism it buys.
+    # repair's cost, and the per-query scan_repair attribute handles the
+    # operators where that cost exceeds the parallelism it buys.
     return df.repartition(par)
 
 TABLES = (
@@ -128,19 +136,12 @@ def ensure_session_defaults(spark: SparkSession) -> None:
             spark.conf.set(k, v)
 
 
-def load_table(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    *,
-    parallelize: bool = True,
-) -> DataFrame:
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table (parquet, schema from the footer).
 
-    ``parallelize=False`` opts out of the scan-parallelism repair (see
-    ``_repair_parallelism``) for callers that read row/file identity
-    columns (``input_file_name()``, ``_metadata``) — those evaluate
-    above the repair's exchange and would come back empty.
+    The scan-parallelism repair (``_repair_parallelism``) applies when
+    ``SCAN_REPAIR`` is True: always outside a query build, and inside
+    one unless the query is registered with ``scan_repair=False``.
 
     ``events.ts`` has shipped in two physical representations across
     fixture generations, and this loader normalizes both to a plain
@@ -159,7 +160,7 @@ def load_table(
     ensure_session_defaults(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.parquet(path)
-    if parallelize:
+    if SCAN_REPAIR.get():
         df = _repair_parallelism(spark, df, path)
     if name == "events":
         from pyspark.sql import functions as F

@@ -67,47 +67,6 @@ def test_sql_pipe_plans_identically_to_ansi(spark, sf_dir):
     assert shape(pipe_df) == shape(ansi_df)
 
 
-# r12 scan-repair opt-outs: the whole-suite A/B (OPTIMIZATION_r12.md,
-# "per-query opt-outs") measured these queries SLOWER with the
-# single-row-group scan repair — their scans feed a keyed exchange
-# directly, so the repair's round-robin shuffle is a pure extra
-# barrier. Each passes parallelize=False at its load_table sites; this
-# gate pins that plan shape so a refactor can't silently re-enable the
-# repair (or a future repair change can't silently disable it for the
-# queries that DO want it).
-REPAIR_OPT_OUTS = [
-    # (q_agg_taildep left this list when its threshold build moved to
-    # the exact_pct_values sketch device — its first hop is now a
-    # CPU-heavy map-side aggregate, the repair-winner profile.)
-    "q_orders_leadtime", "q_ml_isotonic",
-    "q_agg_kendall", "q_orders_repeat", "q_agg_sketch_setops",
-    "q_tpch_q17", "q_win_rank", "q_tpch_q4", "q_tpch_q19",
-    "q_ml_nearest_centroid", "q_subquery_correlated", "q_tpch_q5",
-    "q_join_trigram", "q_tpch_q8", "q_exists_correlated",
-    "q_ts_variance_ratio", "q_join_asof", "q_retention",
-    "q_ts_haar_energy", "q_ts_granger", "q_agg_xtab_residuals",
-    "q_orders_croston", "q_tpch_q9", "q_join_dpp",
-    "q_text_source_divergence", "q_join_multiway",
-    "q_ts_holt_winters", "q_tpch_q18",
-    # r13 additions: the driver-regressed-44 re-verification
-    # (tools/ab_repair.py, interleaved same-session ON/OFF medians,
-    # clean ON-vs-ON control at 0.95-1.04) measured these 33 at
-    # off/on <= 0.90 — all are sub-2 s queries whose scans feed keyed
-    # exchanges or light map work where the repair's round-robin is a
-    # pure extra barrier. Artifact: AB_REPAIR_r13.json.
-    "q_text_lexical_diversity", "q_tpch_q13", "q_ml_odds_ratio",
-    "q_feature_woe", "q_agg_kll", "q_pack_sequences", "q_recursive_cte",
-    "q_tpch_q3", "q_tpch_q10", "q_agg_overdispersion",
-    "q_ts_yule_walker", "q_anomaly_seasonal", "q_tpch_q22", "q_ts_dtw",
-    "q_embed_drift", "q_dedup_url", "q_skyline", "q_ts_perm_entropy",
-    "q_ts_mann_kendall", "q_ts_holt", "q_ts_backtest", "q_tpch_q6",
-    "q_text_vocab_coverage", "q_ts_decompose", "q_dedup_exact",
-    "q_agg_heavy", "q_graph_neighbor_degree", "q_ts_cointegration",
-    "q_tpch_q15", "q_events_burstiness", "q_split_hash",
-    "q_dq_expectations", "q_tpch_q7",
-]
-
-
 def _physical(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
@@ -115,11 +74,21 @@ def _physical(df) -> str:
 
 
 def test_repair_opt_outs_carry_no_roundrobin_exchange(spark, sf_dir):
+    """Every query registered with ``scan_repair=False`` (the reasons sit
+    beside each decorator; the classes are in the registry.query
+    docstring) plans no round-robin repair exchange, so a refactor can't
+    silently re-enable the repair on them."""
     from asyncdatapipeline_spark import registry
 
+    registry._load_all()
+    names = [n for n, qd in registry._REGISTRY.items() if not qd.scan_repair]
+    # the plan-shape and row-identity opt-outs, and a measured one
+    assert {"q_graph_pagerank", "q_join_bloom", "q_unpivot", "q_scan_files"} <= set(
+        names
+    )
     bad = [
         name
-        for name in REPAIR_OPT_OUTS
+        for name in names
         if "RoundRobinPartitioning"
         in _physical(registry.get(name).fn(spark, sf_dir))
     ]
@@ -134,5 +103,66 @@ def test_repair_still_engages_for_compute_heavy_scans(spark, sf_dir):
     from asyncdatapipeline_spark import registry
 
     for name in ("q_ml_vif", "q_agg_winsorized_corr"):
+        assert registry.get(name).scan_repair, f"{name} opted out"
         plan = _physical(registry.get(name).fn(spark, sf_dir))
         assert "RoundRobinPartitioning" in plan, f"{name} lost the repair"
+
+
+def _lineitem_plan(spark, sf_dir) -> str:
+    from asyncdatapipeline_spark.sources.tables import load_table
+
+    return _physical(load_table(spark, sf_dir, "lineitem"))
+
+
+def test_scan_repair_setting_is_scoped_to_one_build(spark, sf_dir):
+    """The opt-out rides the query's own function, not the registry
+    lookup, and ends with its build: a plain load_table afterwards (also
+    after an opted-out build that raised) repairs again."""
+    from asyncdatapipeline_spark import registry
+    from asyncdatapipeline_spark.operators.scans import q_scan_files
+    from asyncdatapipeline_spark.sources.tables import SCAN_REPAIR
+
+    df = q_scan_files(spark, sf_dir)
+    assert "RoundRobinPartitioning" not in _physical(df)
+    files = [r.file for r in df.select("file").collect()]
+    assert files and all(files), files
+    assert "RoundRobinPartitioning" in _lineitem_plan(spark, sf_dir)
+
+    @registry.query("_t_raises_in_build", scan_repair=False)
+    def raises(spark, sf_dir):
+        assert not SCAN_REPAIR.get()
+        raise RuntimeError("build failed")
+
+    try:
+        with pytest.raises(RuntimeError):
+            raises(spark, sf_dir)
+    finally:
+        registry._REGISTRY.pop("_t_raises_in_build")
+    assert SCAN_REPAIR.get()
+    assert "RoundRobinPartitioning" in _lineitem_plan(spark, sf_dir)
+
+
+def test_repair_split_estimate_reads_session_max_partition_bytes(spark, tmp_path):
+    """A file Spark already splits (8+ row groups at a 1k split size) is
+    left alone: the natural-split estimate reads
+    ``spark.sql.files.maxPartitionBytes`` from the session rather than
+    assuming 128 MB."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    par = spark.sparkContext.defaultParallelism
+    groups = max(8, -(-par // 2))
+    rows = 4_000
+    pq.write_table(
+        pa.table({"l_orderkey": list(range(rows))}),
+        tmp_path / "lineitem.parquet",
+        row_group_size=-(-rows // groups),
+    )
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        plan = _lineitem_plan(spark, str(tmp_path))
+    finally:
+        spark.conf.set(key, prev)
+    assert "RoundRobinPartitioning" not in plan

@@ -4,8 +4,8 @@ box, via a whole-suite toggle — re-verify the driver-regressed set with
 the interleaved protocol that survives this box's 1.5-2× weather).
 
 For each query: builds the plan with the repair ON and OFF (module-level
-``tables._REPAIR_MAX_BYTES`` toggled between builds — the env knob is
-read at import, so the attribute is the runtime switch); queries whose
+``tables._REPAIR_MAX_BYTES`` toggled between builds — the loader reads
+that constant on every call, so it is the runtime switch); queries whose
 ON-plan contains no RoundRobinPartitioning are reported as "inactive"
 (nothing to toggle — either opted out or repair conditions unmet); the
 rest run one warmup pass per variant, then N interleaved
